@@ -19,10 +19,13 @@ import graft.sources.TextCorpus
   * colon-separated input files (paths/globs), map parallelism, reduce
   * parallelism (0 = leave to Catalyst/AQE — the right default outside
   * benchmarking), mapper and reducer registry names, output location.
-  * Output is the reference's `key - [value]` text sink, totally ordered
-  * (its nondeterministic append order and final-flush bug are
-  * intentionally not replicated); map-valued results (reduce_id) render
-  * as canonical doc-sorted JSON. */
+  * Output is the reference's `key - [value]` text sink in one file,
+  * totally ordered by key (its nondeterministic append order and
+  * final-flush bug are intentionally not replicated); map-valued results
+  * (reduce_id) render as canonical doc-sorted JSON. The sink sorts the
+  * reduced rows in its one writing task (`TextCorpus.writeFormatted`),
+  * so the optimizer drops the registry's global `orderBy` beneath it:
+  * each job runs its reduce once, with no range-bounds sampling job. */
 object JobRunner {
 
   private def usage: String =
@@ -31,8 +34,8 @@ object JobRunner {
        |  reduce_fn one of: ${MapReduce.reducerNames.toSeq.sorted.mkString(", ")}""".stripMargin
 
   /** The runnable job body, separated from `main` so tests can drive it
-    * on an existing session. Returns the formatted result frame that was
-    * written. */
+    * on an existing session. Returns the (key, value) result frame the
+    * sink formatted and wrote; map values are already rendered as JSON. */
   def run(spark: org.apache.spark.sql.SparkSession, files: Seq[String],
           mapNum: Int, reduceNum: Int, mapFn: String, reduceFn: String,
           output: String): DataFrame = {

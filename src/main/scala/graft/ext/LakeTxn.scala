@@ -170,17 +170,20 @@ object LakeTxn {
     * are followed by `}}`, never by a lone line-final `}`. */
   private val InCommitTsRe = ""","tsMs":(\d+)\}$""".r
 
-  /** The FIRST LINE of a file (capped — the stamp is always on line
-    * one by wire contract, so resolution never reads a whole
-    * many-thousand-action commit body). */
-  private def readFirstLine(fs: FileSystem, p: Path,
-                            cap: Int = 1 << 16): String = {
+  /** The last `keep` bytes of the FIRST LINE of a file. The stamp is
+    * always on line one by wire contract, so resolution never reads a
+    * whole many-thousand-action commit body; it is line-final and
+    * under 30 bytes, so a bounded tail holds it however long the line
+    * (a DV add listing thousands of basenames, a large advisory blob). */
+  private def firstLineTail(fs: FileSystem, p: Path, keep: Int = 64): String = {
     val in = fs.open(p)
     try {
-      val out = new java.io.ByteArrayOutputStream()
+      val ring = new Array[Byte](keep)
+      var n = 0L
       var b = in.read()
-      while (b >= 0 && b != '\n' && out.size < cap) { out.write(b); b = in.read() }
-      new String(out.toByteArray, UTF_8)
+      while (b >= 0 && b != '\n') { ring((n % keep).toInt) = b.toByte; n += 1; b = in.read() }
+      val start = if (n > keep) (n % keep).toInt else 0
+      new String(Array.tabulate(math.min(n, keep.toLong).toInt)(i => ring((start + i) % keep)), UTF_8)
     } finally in.close()
   }
 
@@ -190,7 +193,7 @@ object LakeTxn {
   def commitTimestamp(spark: SparkSession, table: String,
                       v: Long): Option[Long] = {
     val p = commitFile(table, v)
-    InCommitTsRe.findFirstMatchIn(readFirstLine(fsOf(spark, p), p))
+    InCommitTsRe.findFirstMatchIn(firstLineTail(fsOf(spark, p), p))
       .map(_.group(1).toLong)
   }
 
@@ -264,7 +267,7 @@ object LakeTxn {
     * wire-format contract — a deeper advisory payload must be
     * base64-wrapped the way `sx`/`pv64`/`dr` are). */
   private val UnknownFieldTail =
-    """(?:,"[A-Za-z0-9_]+":(?:"(?:[^"\\]|\\.)*"|-?\d+(?:\.\d+)?|true|false|null|\{[^{}]*\}|\[[^\[\]]*\]))*"""
+    """(?:,"[A-Za-z0-9_]+":(?:"(?:[^"\\]++|\\.)*+"|-?\d+(?:\.\d+)?|true|false|null|\{[^{}]*\}|\[[^\[\]]*\]))*"""
   private val ActionRe =
     ("""\{"a":"(add|remove|dv|schema)","f":"([^"]+)"(?:,"rows":(\d+))?(?:,"b":(\d+))?""" +
       """(?:,"c":"([^"]+)","min":(-?\d+),"max":(-?\d+))?""" +

@@ -19,13 +19,20 @@ object TextCorpus {
       .select(col("value").as("text"),
         element_at(split(input_file_name(), "/"), -1).as("source"))
 
-  /** Write the reference's final.txt shape: `word - [value]` lines,
-    * totally ordered (the canonical fix of its nondeterministic append
-    * order and final-flush bug). */
+  /** Write the reference's final.txt shape: `word - [value]` lines in one
+    * file, totally ordered by the first column (the canonical fix of its
+    * nondeterministic append order and final-flush bug).
+    *
+    * The sink owns that order: it moves the rows to one task and sorts
+    * them there. A global `orderBy` of the caller beneath it is then
+    * redundant, and Catalyst's `EliminateSorts` drops it, so an ordered
+    * input (`MapReduce.run`) pays neither the range-bounds sampling job
+    * nor the second run of its plan that sampling costs. */
   def writeFormatted(df: DataFrame, path: String): Unit =
     df.select(format_string("%s - [%s]", col(df.columns.head),
-        col(df.columns(1))).as("value"))
-      .coalesce(1)
+        col(df.columns(1))).as("value"), col(df.columns.head).as("key"))
+      .repartition(1).sortWithinPartitions("key")
+      .select("value")
       .write.mode("overwrite").text(path)
 
   /** The whole reference pipeline in one call: files → word count →

@@ -3,6 +3,7 @@ package graft
 import graft.apps.{InvertedIndex, WordCount}
 import graft.core.MapReduce
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, to_json}
 
 /** Mini-corpus goldens (FIXTURES.md §3.2): hand-computed word-count and
   * inverted-index expectations over 3 tiny docs, plus proof that the
@@ -46,12 +47,33 @@ class AppsSpec extends SparkSpec {
     assert(viaReg == direct)
   }
 
-  test("registry inverted index (typed Aggregator) == postings") {
-    val direct = InvertedIndex.postings(corpus)
-      .as[(String, Map[String, Long])].collect().toMap
-    val viaReg = MapReduce.run(corpus, "map_id", "reduce_id")
-      .as[(String, Map[String, Long])].collect().toMap
-    assert(viaReg == direct)
+  /** 40 docs over a 25-word vocabulary: most words sit in many docs, and
+    * in many input rows, so partial and final aggregates both merge. */
+  private lazy val wideCorpus: DataFrame = {
+    val rnd = new scala.util.Random(7)
+    (0 until 40).map(d => (f"d$d%02d.txt",
+      Seq.fill(30)(s"w${rnd.nextInt(25)}").mkString(" "))).toDF("source", "text")
+  }
+
+  /** (key, postings as JSON in the map's own entry order): equal
+    * renderings mean equal entries in equal order. */
+  private def postingsInOrder(df: DataFrame): Seq[(String, String)] =
+    df.select(col(df.columns(0)), to_json(col(df.columns(1))))
+      .as[(String, String)].collect().toSeq
+
+  test("registry inverted index == postings, default and explicit parallelism") {
+    // map_wc + reduce_id too: the reducer must combine raw (key, doc) rows
+    for (docs <- Seq(corpus, wideCorpus); mapFn <- Seq("map_id", "map_wc");
+         (mapPar, reducePar) <- Seq((0, 0), (5, 3))) {
+      val viaReg = MapReduce.run(docs, mapFn, "reduce_id", mapPar, reducePar)
+      assert(postingsInOrder(viaReg) == postingsInOrder(InvertedIndex.postings(docs)),
+        s"$mapFn at ($mapPar, $reducePar)")
+    }
+    // the direct form is itself doc-sorted, so the registry's is too
+    val canonical = InvertedIndex.postings(wideCorpus)
+      .select(to_json(col("postings")), InvertedIndex.postingsToJson(col("postings")))
+      .as[(String, String)].collect()
+    assert(canonical.forall { case (raw, sorted) => raw == sorted })
   }
 
   test("formatted sink lines") {

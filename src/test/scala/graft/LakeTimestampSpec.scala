@@ -110,6 +110,25 @@ class LakeTimestampSpec extends SparkSpec {
     assert(got === got.sorted)
   }
 
+  test("the stamp of a first action line over 64 KB is still read") {
+    val t = freshDir("long")
+    build3(t)
+    val ts1 = LakeTxn.commitTimestamp(spark, t, 1L).get
+    // widen commit 1's first line past 64 KB with an advisory field
+    // ahead of the line-final stamp (as a long DV basename list would)
+    val v1 = java.nio.file.Paths.get(t, "_graft_log", f"${1L}%020d.json")
+    val body = new String(java.nio.file.Files.readAllBytes(v1), UTF_8)
+    val pad = "x" * (1 << 17)
+    java.nio.file.Files.write(v1,
+      body.replaceFirst(""","tsMs":""", s""","pad":"$pad","tsMs":""").getBytes(UTF_8))
+    assert(body.linesIterator.next().length < (1 << 16))
+    assert(new String(java.nio.file.Files.readAllBytes(v1), UTF_8)
+      .linesIterator.next().length > (1 << 17))
+    assert(LakeTxn.commitTimestamp(spark, t, 1L) === Some(ts1))
+    assert(LakeTxn.versionAtTimestamp(spark, t, ts1) === 1L)
+    assert(LakeTxn.read(spark, t, Some(1L)).count() === 20L)
+  }
+
   test("unknown advisory fields with escapes, null, objects and arrays parse") {
     val t = freshDir("tail")
     build3(t)

@@ -110,6 +110,70 @@ class TextCorpusSpec extends SparkSpec {
     assert(id.contains("""dog - [{"b.txt":1}]"""))
   }
 
+  test("JobRunner sink: no range-partitioning exchange, totally ordered lines") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    // several files of lowercase words, which the tokenizer keeps as they are
+    val dir = Files.createTempDirectory("graft_sink")
+    val rnd = new scala.util.Random(11)
+    val files = (0 until 4).map { f =>
+      val text = Seq.fill(6)(Seq.fill(40)(s"w${rnd.nextInt(300)}").mkString(" ")).mkString("\n")
+      Files.writeString(dir.resolve(s"f$f.txt"), text + "\n")
+      (s"f$f.txt", text.split("\\s+").toSeq)
+    }
+    val wcWant = files.flatMap(_._2).groupBy(identity).toSeq.sortBy(_._1)
+      .map { case (w, ws) => s"$w - [${ws.size}]" }
+    val idWant = files.flatMap { case (f, ws) => ws.map(_ -> f) }.groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (w, occ) =>
+        val postings = occ.groupBy(_._2).toSeq.sortBy(_._1)
+          .map { case (f, n) => s""""$f":${n.size}""" }.mkString(",")
+        s"$w - [{$postings}]"
+      }
+    // the executed plan of each write, expanded through AQE's stages
+    def expand(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
+    }).flatMap(expand)
+    val writes = new java.util.concurrent.CopyOnWriteArrayList[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (expand(qe.executedPlan).exists(_.isInstanceOf[DataWritingCommandExec]))
+          writes.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def rangeExchanges(p: SparkPlan): Seq[SparkPlan] = expand(p).collect {
+      case e: ShuffleExchangeLike if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    spark.listenerManager.register(listener)
+    try {
+      for ((mapFn, reduceFn, want) <- Seq(("map_wc", "reduce_wc", wcWant),
+                                          ("map_id", "reduce_id", idWant))) {
+        val out = dir.resolve(mapFn).toString
+        val result = JobRunner.run(spark, files.map { case (f, _) => s"$dir/$f" },
+          mapNum = 5, reduceNum = 0, mapFn, reduceFn, out)
+        // the detector sees the exchange of the ordered result on its own
+        result.collect()
+        assert(rangeExchanges(result.queryExecution.executedPlan).nonEmpty)
+        // listener delivery is async; the write command's plan names its path
+        def write = writes.asScala.find(_.toString.contains(out))
+        val deadline = System.nanoTime() + 10000000000L
+        while (write.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+        val plan = write.getOrElse(fail(s"$mapFn: no write plan captured for $out"))
+        assert(rangeExchanges(plan).isEmpty, s"$mapFn sink plan:\n$plan")
+        val parts = Files.list(java.nio.file.Paths.get(out)).iterator().asScala.toSeq
+          .filter(_.getFileName.toString.startsWith("part-"))
+        assert(parts.size == 1, parts.mkString(", "))
+        assert(Files.readAllLines(parts.head).asScala.toSeq == want, mapFn)
+      }
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("streaming dedup emits one row per key") {
     val stream = graft.streaming.EventsStream.dedupStream(
       graft.streaming.EventsStream.readEvents(spark, "/root/testdata/sf0.001"))
